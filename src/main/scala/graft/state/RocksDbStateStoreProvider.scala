@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 import scala.collection.mutable
-import scala.util.Try
+import scala.util.{Try, Using}
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -364,8 +364,8 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             opened.db.createColumnFamilyWithTtl(
               new ColumnFamilyDescriptor(r.cf.getBytes("UTF-8"), cfOptions()), compactionTtlFor(r.cf))
           })
-          if (r.op == Changelog.OpPut) opened.db.put(h, r.key, r.value)
-          else opened.db.delete(h, r.key)
+          if (r.op == Changelog.OpPut) opened.db.put(h, NoWal, r.key, r.value)
+          else opened.db.delete(h, NoWal, r.key)
         }
       }
       val fo = new FlushOptions().setWaitForFlush(true)
@@ -651,6 +651,11 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     else conf.ttlSecs
 
   private def cfOptions(): ColumnFamilyOptions = {
+    // Every CF gets a Bloom filter, as in Spark's built-in provider: most
+    // gets miss, and a miss without one reads an index and a data block per
+    // sorted run. Filters stay in table-reader memory (~1.25 B/key), out of
+    // the block cache, lest they evict data blocks.
+    val table = new BlockBasedTableConfig().setFilterPolicy(KeyBloomFilter)
     val o = new ColumnFamilyOptions()
       .setWriteBufferSize(conf.writeBufferSizeMb * 1024L * 1024L)
       .setMaxWriteBufferNumber(conf.writeBufferNumber)
@@ -659,8 +664,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     SharedRocksMemory.forBudget(conf.totalMemoryMb).foreach { pool =>
       // Under a JVM-wide budget every CF reads through the ONE shared block
       // cache, so N instances can't each allocate a private default cache.
-      o.setTableFormatConfig(
-        new org.rocksdb.BlockBasedTableConfig().setBlockCache(pool.cache))
+      table.setBlockCache(pool.cache)
       // Per-instance buffers must be sized for the FLEET, not for one DB:
       // an executor hosts one instance per (operator × partition × store),
       // so a 4-store join at 8+ partitions opens 32+ DBs whose memtable
@@ -670,12 +674,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       // swallow the manager's share — with flush-don't-stall this turns
       // over-budget pressure into small flushes instead of write stalls.
       val cap = math.max(pool.budgetBytes / 32, 1L << 20)
-      if (cap < conf.writeBufferSizeMb * 1024L * 1024L && sys.env.get("GRAFT_OLDMODE").isEmpty) {
+      if (cap < conf.writeBufferSizeMb * 1024L * 1024L) {
         o.setWriteBufferSize(cap)
         o.setArenaBlockSize(math.max(cap / 8, 64L * 1024))
       }
     }
-    o
+    o.setTableFormatConfig(table)
   }
 
   private[state] case class OpenDb(db: TtlDB, handles: mutable.LinkedHashMap[String, ColumnFamilyHandle])
@@ -694,10 +698,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     SharedRocksMemory.forBudget(conf.totalMemoryMb).foreach { pool =>
       dbOptions.setWriteBufferManager(pool.writeBufferManager)
     }
-    val listed = Try {
-      org.rocksdb.RocksDB.listColumnFamilies(new Options(dbOptions, cfOptions()), dir.getAbsolutePath)
-        .asScala.map(new String(_, "UTF-8")).toSeq
-    }.getOrElse(Nil)
+    val listed = Try(Using.resource(new Options()) { o =>
+      org.rocksdb.RocksDB.listColumnFamilies(o, dir.getAbsolutePath).asScala.map(new String(_, "UTF-8")).toSeq
+    }).getOrElse(Nil)
     val names = if (listed.isEmpty) Seq(DefaultCf) else listed
     val descriptors = names.map(n => new ColumnFamilyDescriptor(n.getBytes("UTF-8"), cfOptions())).asJava
     val ttls = names.map(n => Integer.valueOf(compactionTtlFor(n))).asJava
@@ -882,6 +885,9 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       * entry for the requested version must point at the previous store's
       * dir for its open handle to view exactly that version.) */
     private[state] def ownsDir(d: File): Boolean = d == dir
+
+    /** Bytes in this DB's write-ahead log files (zero: writes skip the WAL). */
+    private[state] def walBytes: Long = db.getSortedWalFiles.asScala.map(_.sizeFileBytes).sum
 
     // Concurrent: cfInfo's fast path reads these WITHOUT the store lock
     // (only the auto-registration slow path synchronizes), and the provider
@@ -1068,10 +1074,10 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
         dbDirty = true
         // forget the persisted count, or a re-created CF of the same name
         // would resurrect it as a phantom numKeys base
-        db.delete(metaHandle, name.getBytes("UTF-8"))
+        db.delete(metaHandle, NoWal, name.getBytes("UTF-8"))
         // likewise the key schema: a re-created CF may legitimately differ
-        db.delete(metaHandle, (KeySchemaMetaPrefix + name).getBytes("UTF-8"))
-        db.delete(metaHandle, (CfRegMetaPrefix + name).getBytes("UTF-8"))
+        db.delete(metaHandle, NoWal, (KeySchemaMetaPrefix + name).getBytes("UTF-8"))
+        db.delete(metaHandle, NoWal, (CfRegMetaPrefix + name).getBytes("UTF-8"))
         persistedCountsMap.remove(name)
         persistedKeySchemas.remove(name)
         persistedCfRegs.remove(name)
@@ -1130,7 +1136,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
     private def touch(cf: String, keyBytes: Array[Byte]): Unit = {
       val now = beLong(clock())
       dbDirty = true
-      db.put(deadlineHandle(cf), keyBytes, now)
+      db.put(deadlineHandle(cf), NoWal, keyBytes, now)
       recordPut(deadlineCfName(cf), keyBytes, now)
     }
 
@@ -1145,13 +1151,13 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           // strict mode is the only expiry authority (no TtlDB compaction
           // expiry) — reclaim the dead record on access
           if (!readOnly && state == State.Updating) synchronized {
-            if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
+            if (conf.trackTotalNumberOfRows && db.keyExists(handle(colFamilyName), kBytes)) {
               info.numKeys -= 1
             }
             dbDirty = true
-            db.delete(handle(colFamilyName), kBytes)
+            db.delete(handle(colFamilyName), NoWal, kBytes)
             recordRemove(colFamilyName, kBytes)
-            db.delete(deadlineHandle(colFamilyName), kBytes)
+            db.delete(deadlineHandle(colFamilyName), NoWal, kBytes)
             recordRemove(deadlineCfName(colFamilyName), kBytes)
           }
           null
@@ -1261,12 +1267,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (stateless) return
       val info = cfInfo(colFamilyName)
       val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) == null) {
+      if (conf.trackTotalNumberOfRows && !db.keyExists(handle(colFamilyName), kBytes)) {
         info.numKeys += 1
       }
       val vBytes = info.valueCodec.encodeSingle(value)
       dbDirty = true
-      db.put(handle(colFamilyName), kBytes, vBytes)
+      db.put(handle(colFamilyName), NoWal, kBytes, vBytes)
       recordPut(colFamilyName, kBytes, vBytes)
       if (strictTtl) touch(colFamilyName, kBytes)
     }
@@ -1278,12 +1284,12 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       verify(info.multiValued, s"putList on single-valued column family $colFamilyName")
       require(values != null && values.nonEmpty, "Cannot put an empty value list")
       val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) == null) {
+      if (conf.trackTotalNumberOfRows && !db.keyExists(handle(colFamilyName), kBytes)) {
         info.numKeys += 1
       }
       val vBytes = info.valueCodec.encodeFrames(values)
       dbDirty = true
-      db.put(handle(colFamilyName), kBytes, vBytes)
+      db.put(handle(colFamilyName), NoWal, kBytes, vBytes)
       recordPut(colFamilyName, kBytes, vBytes)
       if (strictTtl) touch(colFamilyName, kBytes)
     }
@@ -1299,7 +1305,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (conf.trackTotalNumberOfRows && existing == null) info.numKeys += 1
       val merged = info.valueCodec.appendFrame(existing, value)
       dbDirty = true
-      db.put(handle(colFamilyName), kBytes, merged)
+      db.put(handle(colFamilyName), NoWal, kBytes, merged)
       recordPut(colFamilyName, kBytes, merged)
       if (strictTtl) touch(colFamilyName, kBytes)
     }
@@ -1324,7 +1330,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
           out
         }
       dbDirty = true
-      db.put(handle(colFamilyName), kBytes, merged)
+      db.put(handle(colFamilyName), NoWal, kBytes, merged)
       recordPut(colFamilyName, kBytes, merged)
       if (strictTtl) touch(colFamilyName, kBytes)
     }
@@ -1334,17 +1340,17 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
       if (stateless) return
       val info = cfInfo(colFamilyName)
       val kBytes = info.keyCodec.encode(key)
-      if (conf.trackTotalNumberOfRows && db.get(handle(colFamilyName), kBytes) != null) {
+      if (conf.trackTotalNumberOfRows && db.keyExists(handle(colFamilyName), kBytes)) {
         info.numKeys -= 1
       }
       dbDirty = true
-      db.delete(handle(colFamilyName), kBytes)
+      db.delete(handle(colFamilyName), NoWal, kBytes)
       recordRemove(colFamilyName, kBytes)
       // Deadline removed with the key — byte-keyed, so actually effective
       // (the reference's UnsafeRow-vs-bytes cache invalidation was a no-op,
       // SURVEY §4 defect 1).
       if (strictTtl) {
-        db.delete(deadlineHandle(colFamilyName), kBytes)
+        db.delete(deadlineHandle(colFamilyName), NoWal, kBytes)
         recordRemove(deadlineCfName(colFamilyName), kBytes)
       }
     }
@@ -1367,7 +1373,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
             val k = i.name.getBytes("UTF-8")
             val v = beLong(i.numKeys)
             dbDirty = true
-            db.put(metaHandle, k, v)
+            db.put(metaHandle, NoWal, k, v)
             recordPut(MetaCf, k, v)
             // keep the in-memory view of the persisted counts current (a
             // commit runs once per store instance today, but the invariant
@@ -1382,7 +1388,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
               val sk = (KeySchemaMetaPrefix + i.name).getBytes("UTF-8")
               val sv = json.getBytes("UTF-8")
               dbDirty = true
-              db.put(metaHandle, sk, sv)
+              db.put(metaHandle, NoWal, sk, sv)
               recordPut(MetaCf, sk, sv)
             }
           }
@@ -1397,7 +1403,7 @@ class RocksDbStateStoreProvider extends StateStoreProvider with Logging
               val rk = (CfRegMetaPrefix + i.name).getBytes("UTF-8")
               val rv = json.getBytes("UTF-8")
               dbDirty = true
-              db.put(metaHandle, rk, rv)
+              db.put(metaHandle, NoWal, rk, rv)
               recordPut(MetaCf, rk, rv)
               persistedCfRegs.put(i.name, json)
             }
@@ -1584,6 +1590,19 @@ object RocksDbStateStoreProvider {
     * (`cfreg:<cfName>` → JSON) — key/value schemas, encoder spec, and the
     * multi-value flag, enough for a cold reader to rebuild the codec. */
   private[state] val CfRegMetaPrefix: String = "cfreg:"
+
+  org.rocksdb.RocksDB.loadLibrary()
+  /** Bloom filter policy (10 bits/key, full filters) shared by every CF. */
+  private val KeyBloomFilter = new BloomFilter(10, false)
+  /** Every put/delete skips the WAL, as in Spark's built-in provider, since
+    * nothing replays it: `commit()` flushes dirty memtables before
+    * registering the dir, `Checkpoint.createCheckpoint` and changelog replay
+    * flush too, an aborted dir is deleted, and a local dir never outlives
+    * its provider (`tempRoot` is per provider), so no process restart
+    * reopens one. Durability is the changelog + snapshots. JVM-wide and
+    * never closed, like [[SharedRocksMemory]]: a handle leaked under the
+    * round-8 contract may still be inside a native call using it. */
+  private[state] val NoWal: WriteOptions = new WriteOptions().setDisableWAL(true)
 
   private[state] def cfRegToJson(
       keySchema: StructType,
